@@ -1,13 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** ONE definition of the bench session + env bootstrap, shared with
-    * [[graft.streaming.StreamBench.main]] — a config flag applied in
-    * only one of the two mains would silently benchmark the stream
-    * lines under a different session than the suite they're read
-    * against. */
+  /** The bench session plus the sf dir it reads (`SPARK_GRAFT_SF_DIR`). */
   private[graft] def session(): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    (localSession(), sfDir)
+  }
+
+  /** ONE definition of the local session the driver-contract mains
+    * build — Bench, [[graft.streaming.StreamBench.main]], Verify and
+    * Probe — at `local[SPARK_GRAFT_CPUS]` (default 4): a config flag
+    * applied in only one of them would silently measure or verify
+    * under a different session than the others are read against.
+    * events.ts is parquet TIMESTAMP(NANOS), read as long and converted
+    * in Tables.events (Spark's TimestampType is micros). */
+  private[graft] def localSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -18,7 +25,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    (spark, sfDir)
+    spark
   }
 
   def main(args: Array[String]): Unit = {

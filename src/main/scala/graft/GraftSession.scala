@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Canonical session builder for graft deployments: the configs that
   * matter at scale, with environment-driven sizing. Library users call
-  * `GraftSession.builder(...)`; the driver-contract mains (Verify,
-  * Bench) keep their own minimal builders per contract.
+  * `GraftSession.builder(...)`; the driver-contract mains (Bench,
+  * StreamBench, Verify, Probe) share the minimal
+  * [[Bench.localSession]] per contract.
   */
 object GraftSession {
 

@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch main for plan experiments (not part of the library API). */
+/** Scratch main for plan experiments (not part of the library API).
+  * Runs on the bench session ([[Bench.localSession]], sized by
+  * `SPARK_GRAFT_CPUS`), so its numbers read against bench numbers. */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     args.headOption match {
       case Some("hotcell") =>

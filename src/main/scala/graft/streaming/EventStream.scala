@@ -471,47 +471,17 @@ object EventStream {
     * full weight table via `onWeights`: the integer math (exact √ of
     * n·10⁶, half-up ppm) is t26's, so after batch k the emitted table
     * is BIT-IDENTICAL to batch t26 over the stream prefix
-    * (spec-pinned). Restart durability: pass `stateDir` and every
-    * folded batch persists the lang histogram as a versioned
-    * [[MonitorState]] snapshot; a fresh closure recovers
-    * (counts, lastBatch) from the highest committed version — exactly
-    * when Structured Streaming redelivers the last uncommitted batch,
-    * which the recovered guard then skips, so post-restart emissions
-    * equal the uninterrupted run's (spec-pinned kill/restart parity).
-    * `seed` stays as the cold-start fallback (a recovered snapshot
-    * supersedes it). Within a run, a re-fired batch id is re-emitted
-    * without re-folding, keeping counts exactly-once per batch id. */
+    * (spec-pinned). Replay, restart (`stateDir`, `seed`) and key bound
+    * (`maxKeys`): the [[FoldMonitor]] contract. */
   def alphaMixForeachBatch(seed: Map[String, Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
       onWeights: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val counts = scala.collection.mutable.Map[String, Long](seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
+    val monitor = new FoldMonitor("alphaMix", FoldMonitor.Str, seed, stateDir,
+      maxKeys)(_.groupBy("lang").agg(count(lit(1))))
     (batch: DataFrame, batchId: Long) => {
+      val counts = monitor.fold(batch, batchId)
       val spark = batch.sparkSession
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            counts.clear()
-            rows.foreach { case (l, _, n) => counts(l) = n }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        // LIMIT the collect: the cap must bound what reaches the
-        // driver, not just the map size after an unbounded collect
-        // already landed (the "fail fast" the guard promises)
-        val folded = batch.groupBy("lang").agg(count(lit(1)).as("__graft_n"))
-          .limit(maxKeys + 1).as[(String, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "alphaMix")
-        folded.foreach { case (l, n) => counts(l) = counts.getOrElse(l, 0L) + n }
-        lastBatch = batchId
-        MonitorState.guardBound(counts.size, maxKeys, "alphaMix")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          counts.toSeq.sorted.map { case (l, n) => (l, "", n) }))
-      }
       val rows = counts.toSeq.sortBy(_._1)
       val ntot = rows.map(_._2).sum
       val sRoots = rows.map { case (_, n) =>
@@ -537,45 +507,20 @@ object EventStream {
     * integer rules against the SAME literal mass table
     * ([[graft.AnalyticsQueries.benfordExpPpm]]), so after batch k
     * the emitted frame is BIT-IDENTICAL to batch q93's arithmetic
-    * over the stream prefix (spec-pinned). Restart durability: pass
-    * `stateDir` for versioned [[MonitorState]] snapshots per folded
-    * batch — a fresh closure recovers (counts, lastBatch) from the
-    * highest committed version, so post-restart reports equal the
-    * uninterrupted run's (spec-pinned); `seed` is the cold-start
-    * fallback (a recovered snapshot supersedes it). A replayed batch
-    * id re-emits without re-folding (counts are not idempotent — the
-    * alphaMix guard). */
+    * over the stream prefix (spec-pinned). Replay, restart and key
+    * bound: the [[FoldMonitor]] contract. */
   def benfordForeachBatch(seed: Map[Long, Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
       onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val counts = scala.collection.mutable.Map[Long, Long](seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
+    val monitor = new FoldMonitor("benford", FoldMonitor.Num, seed, stateDir,
+      maxKeys)(_.filter(col("cents") > 0)
+        .select(substring(col("cents").cast("string"), 1, 1)
+          .cast("long").as("digit"))
+        .groupBy("digit").agg(count(lit(1))))
     (batch: DataFrame, batchId: Long) => {
+      val counts = monitor.fold(batch, batchId)
       val spark = batch.sparkSession
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            counts.clear()
-            rows.foreach { case (d, _, n) => counts(d.toLong) = n }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch.filter(col("cents") > 0)
-          .select(substring(col("cents").cast("string"), 1, 1)
-            .cast("long").as("digit"))
-          .groupBy("digit").agg(count(lit(1)).as("__graft_n"))
-          .limit(maxKeys + 1).as[(Long, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "benford")
-        folded.foreach { case (d, n) => counts(d) = counts.getOrElse(d, 0L) + n }
-        lastBatch = batchId
-        MonitorState.guardBound(counts.size, maxKeys, "benford")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          counts.toSeq.sorted.map { case (k, n) => (k.toString, "", n) }))
-      }
       val total = counts.values.sum
       val rows = graft.AnalyticsQueries.benfordExpPpm.map { case (d, exp) =>
         val cnt = counts.getOrElse(d, 0L)
@@ -591,6 +536,12 @@ object EventStream {
       onReport(out, batchId)
     }
   }
+
+  /** The (event_type, day) → cents fold frame of cusum and the control
+    * chart (partial daily sums add losslessly). */
+  private def typeDayCents(batch: DataFrame): DataFrame =
+    batch.groupBy(col("event_type"), col("day").cast("string"))
+      .agg(sum("cents"))
 
   /** Streaming CUSUM monitor (#262) — q99's streaming twin: as value
     * facts arrive (any frame with `event_type` STRING, `day` DATE,
@@ -610,45 +561,16 @@ object EventStream {
     * semantics CUSUM wants: a late fact retroactively shifts the
     * whole trajectory — this twin RE-DERIVES from counters, so late
     * arrivals are folded exactly, never dropped at a watermark.
-    * Restart durability: pass `stateDir` for versioned
-    * [[MonitorState]] snapshots per folded batch — a fresh closure
-    * recovers (cells, lastBatch) from the highest committed version,
-    * so post-restart reports equal the uninterrupted run's
-    * (spec-pinned); `seed` is the cold-start fallback (a recovered
-    * snapshot supersedes it). Replayed batch ids re-emit without
-    * re-folding (counts are not idempotent). */
+    * Replay, restart and key bound: the [[FoldMonitor]] contract. */
   def cusumForeachBatch(seed: Map[(String, String), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
       onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, String), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
+    val monitor = new FoldMonitor("cusum", FoldMonitor.StrStr, seed, stateDir,
+      maxKeys)(typeDayCents)
     (batch: DataFrame, batchId: Long) => {
+      val cells = monitor.fold(batch, batchId)
       val spark = batch.sparkSession
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (et, d, c) => cells((et, d)) = c }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch
-          .groupBy(col("event_type"), col("day").cast("string").as("d"))
-          .agg(sum("cents").as("__graft_c"))
-          .limit(maxKeys + 1).as[(String, String, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "cusum")
-        folded.foreach { case (et, d, c) =>
-          cells((et, d)) = cells.getOrElse((et, d), 0L) + c }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "cusum")
-        stateDir.foreach(dir => MonitorState.save(spark, dir, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((et, d), c) => (et, d, c) }))
-      }
       val rows = cells.toSeq.map { case ((et, d), c) => (et, d, c) }
         .groupBy(_._1).toSeq.flatMap { case (et, trs) =>
           val seq = trs.sortBy(_._2)
@@ -689,42 +611,19 @@ object EventStream {
     * limits retroactively (re-derived, never watermark-dropped) and
     * post-reference facts can never shift them. Types with no
     * reference day yet emit nothing (batch q122's inner join drops
-    * them too). Same [[MonitorState]] restart/replay contract as the
-    * other five monitors. */
+    * them too). Replay, restart and key bound: the [[FoldMonitor]]
+    * contract. */
   def controlChartForeachBatch(
       refEnd: String = graft.AnalyticsQueries.DriftRefEnd,
       seed: Map[(String, String), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
       onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, String), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
+    val monitor = new FoldMonitor("control_chart", FoldMonitor.StrStr, seed,
+      stateDir, maxKeys)(typeDayCents)
     (batch: DataFrame, batchId: Long) => {
+      val cells = monitor.fold(batch, batchId)
       val spark = batch.sparkSession
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (et, d, c) => cells((et, d)) = c }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch
-          .groupBy(col("event_type"), col("day").cast("string").as("d"))
-          .agg(sum("cents").as("__graft_c"))
-          .limit(maxKeys + 1).as[(String, String, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "control_chart")
-        folded.foreach { case (et, d, c) =>
-          cells((et, d)) = cells.getOrElse((et, d), 0L) + c }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "control_chart")
-        stateDir.foreach(dir => MonitorState.save(spark, dir, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((et, d), c) => (et, d, c) }))
-      }
       val rows = cells.toSeq.map { case ((et, d), c) => (et, d, c) }
         .groupBy(_._1).toSeq.flatMap { case (et, trs) =>
           val ref = trs.filter(_._2 <= refEnd).map(_._3)
@@ -812,20 +711,15 @@ object EventStream {
     * BigInt — the driver-side twin of the decimal(38) path), so
     * after batch k the frame is BIT-IDENTICAL to batch q104 over the
     * stream prefix (spec-pinned per batch AND vs the oracled q104 at
-    * end state). Restart durability: pass `stateDir` for versioned
-    * [[MonitorState]] snapshots per folded batch — a fresh closure
-    * recovers (cells, lastBatch) from the highest committed version,
-    * so post-restart reports equal the uninterrupted run's
-    * (spec-pinned); `seed` is the cold-start fallback. Replayed batch
-    * ids re-emit without re-folding. */
+    * end state). Replay, restart and key bound: the [[FoldMonitor]]
+    * contract. */
   def chiSquareForeachBatch(nation: DataFrame,
       seed: Map[(String, Long), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
       onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, Long), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
+    val monitor = new FoldMonitor("chiSquare", FoldMonitor.StrNum, seed,
+      stateDir, maxKeys)(_.groupBy(col("segment"),
+        col("nationkey").cast("long")).agg(count(lit(1))))
     var natNames: Map[Long, String] = null
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
@@ -834,29 +728,7 @@ object EventStream {
         natNames = nation
           .select(col("n_nationkey").cast("long"), col("n_name"))
           .as[(Long, String)].collect().toMap
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (s, nk, n) => cells((s, nk.toLong)) = n }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch
-          .groupBy(col("segment"), col("nationkey").cast("long").as("nk"))
-          .agg(count(lit(1)).as("__graft_n"))
-          .limit(maxKeys + 1).as[(String, Long, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "chiSquare")
-        folded.foreach { case (s, nk, n) =>
-          cells((s, nk)) = cells.getOrElse((s, nk), 0L) + n }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "chiSquare")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((s, nk), n) =>
-            (s, nk.toString, n) }))
-      }
+      val cells = monitor.fold(batch, batchId)
       // batch q104's integer rules over the cell histogram
       val o = cells.toSeq.map { case ((s, nk), n) => (s, nk, BigInt(n)) }
       val n = o.map(_._3).sum
@@ -892,48 +764,19 @@ object EventStream {
     * histogram by the same prefix-min rule — so after batch k the
     * emitted frontier is BIT-IDENTICAL to batch q103 over the prefix
     * (spec-pinned per batch AND vs the oracled q103 at end state).
-    * Replayed batch ids re-emit without re-folding (min-merge WOULD
-    * tolerate replay — idempotent — but the guard keeps the fold
-    * exactly-once by construction, the #185 convention). Restart
-    * durability: pass `stateDir` for versioned [[MonitorState]]
-    * snapshots per folded batch — a fresh closure recovers
-    * (cells, lastBatch) from the highest committed version, so
-    * post-restart frontiers equal the uninterrupted run's
-    * (spec-pinned); `seed` is the cold-start fallback. */
+    * Replay, restart and key bound: the [[FoldMonitor]] contract
+    * (min-merge WOULD tolerate replay, but the guard keeps the fold
+    * exactly-once by construction). */
   def skylineForeachBatch(seed: Map[(String, Long), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
       onFrontier: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, Long), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
+    val monitor = new FoldMonitor("skyline", FoldMonitor.StrNum, seed,
+      stateDir, maxKeys, merge = math.min)(
+      _.groupBy(col("brand"), col("price_cents")).agg(min("size")))
     (batch: DataFrame, batchId: Long) => {
+      val cells = monitor.fold(batch, batchId)
       val spark = batch.sparkSession
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (b, p, s) => cells((b, p.toLong)) = s }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch.groupBy(col("brand"), col("price_cents"))
-          .agg(min("size").as("__graft_s"))
-          .limit(maxKeys + 1).as[(String, Long, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "skyline")
-        folded.foreach { case (b, p, s) =>
-          val k = (b, p)
-          cells(k) = cells.get(k).fold(s)(math.min(_, s))
-        }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "skyline")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((b, p), s) =>
-            (b, p.toString, s) }))
-      }
       // frontier from the histogram: ascending price, strict prefix-min
       val rows = cells.toSeq.map { case ((b, p), s) => (b, p, s) }
         .groupBy(_._1).toSeq.flatMap { case (b, pts) =>
@@ -1052,23 +895,12 @@ object EventStream {
         // state AND group histogram both committed (a crash between
         // the two writes falls back to the previous version, and the
         // redelivered batch re-folds — convergent either way)
-        val root = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) {
-          val committed = fs.listStatus(root).map(_.getPath.getName)
-            .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-            .filter { v =>
-              fs.exists(new org.apache.hadoop.fs.Path(root, s"v$v/_SUCCESS")) &&
-                fs.exists(new org.apache.hadoop.fs.Path(root, s"grp_v$v/_SUCCESS"))
-            }
-          if (committed.nonEmpty) {
-            val v = committed.max
-            triDir = Some(s"$stateDir/v$v")
-            lastBatch = v
-            spark.read.parquet(s"$stateDir/grp_v$v")
-              .as[(String, Long, Long)].collect()
-              .foreach { case (s, nk, n) => grpCounts((s, nk)) = n }
-          }
+        committedVersion(spark, stateDir, Seq("v", "grp_v")).foreach { v =>
+          triDir = Some(s"$stateDir/v$v")
+          lastBatch = v
+          spark.read.parquet(s"$stateDir/grp_v$v")
+            .as[(String, Long, Long)].collect()
+            .foreach { case (s, nk, n) => grpCounts((s, nk)) = n }
         }
         recovered = true
       }
@@ -1149,23 +981,12 @@ object EventStream {
         // state AND lang histogram both committed (a crash between the
         // two writes falls back to the previous version, and the
         // redelivered batch re-folds — convergent either way)
-        val root = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) {
-          val committed = fs.listStatus(root).map(_.getPath.getName)
-            .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-            .filter { v =>
-              fs.exists(new org.apache.hadoop.fs.Path(root, s"v$v/_SUCCESS")) &&
-                fs.exists(new org.apache.hadoop.fs.Path(root, s"lang_v$v/_SUCCESS"))
-            }
-          if (committed.nonEmpty) {
-            val v = committed.max
-            tokDir = Some(s"$stateDir/v$v")
-            lastBatch = v
-            spark.read.parquet(s"$stateDir/lang_v$v")
-              .as[(String, Long)].collect()
-              .foreach { case (l, n) => langCounts(l) = n }
-          }
+        committedVersion(spark, stateDir, Seq("v", "lang_v")).foreach { v =>
+          tokDir = Some(s"$stateDir/v$v")
+          lastBatch = v
+          spark.read.parquet(s"$stateDir/lang_v$v")
+            .as[(String, Long)].collect()
+            .foreach { case (l, n) => langCounts(l) = n }
         }
         recovered = true
       }
@@ -1205,118 +1026,113 @@ object EventStream {
     }
   }
 
-  /** Streaming histogram-artifact maintenance (#194) — the producer
-    * side of the q75/q57 artifact consumers run from a stream: keep a
-    * day-partitioned (day, keys…, v) → count histogram table current
-    * as events arrive, so the no-rescan drift/winsorize/quantile
-    * consumers always have tonight's artifact without a batch job.
-    * Per micro-batch: the batch reduces to its own counts, the
-    * TOUCHED days' stored rows (and only those — a batch near the
-    * frontier touches 1–2 partitions however long the history) merge
-    * in by count addition, and #158's dynamic-partition overwrite
-    * swaps exactly those day partitions. The merged frame is
-    * materialized through a checkpoint first — it READS the very
-    * files the overwrite replaces (the AnnIndex.maintain
-    * materialize-before-overwrite hazard class). Count addition is
-    * associative, so the final table is bit-identical to a one-shot
-    * batch [[graft.sources.SketchStore.saveHistogram]] over the whole
-    * stream (spec-pinned), and a replayed batch id re-merges nothing —
-    * including the post-crash redelivery, via the durable batch stamp
-    * ([[readBatchStamp]]; the stamp's one narrow at-least-once window
-    * is documented there). Batch schema: `day` + `keyCols` + `v`. */
-  /** Durable batch-id stamp beside a maintained COUNT artifact: count
-    * addition is not replay-idempotent (unlike the HLL register union
-    * in overlapHllForeachBatch), so a post-crash redelivery of the
-    * last batch must be detected ACROSS JVMs, not just by the
-    * in-memory guard. The stamp is a `_`-prefixed file inside the
-    * artifact dir — invisible to Spark's file index, co-located so it
-    * travels with the artifact. Written AFTER the artifact overwrite:
-    * a crash in the narrow window between the two leaves that one
-    * batch at-least-once (re-merged on redelivery) — vs. the
-    * unstamped behavior where EVERY post-crash redelivery
-    * double-merged. */
-  private def readBatchStamp(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_graft_last_batch")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      // a torn/empty stamp (crash mid-write on a filesystem without
-      // atomic rename) must degrade to the documented one-batch
-      // at-least-once window, never brick the stream with a parse
-      // error on every restart
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        try s.toLong catch { case _: NumberFormatException => -1L }
-      } finally in.close()
+  /** The driver-fold monitor skeleton: alphaMix, benford, cusum,
+    * controlChart, chiSquare and skyline each supply only a fold frame
+    * (grouped by its one or two key columns, then one Long value
+    * column), a [[FoldMonitor.Codec]] between their key and the
+    * `(k1, k2, v)` snapshot row, and a report over the state `fold`
+    * returns. The durability contract, written once for all six:
+    *
+    *  - '''State''' is one Long per key of a configuration-scale
+    *    domain (languages, digits, segments × nations, types × days,
+    *    brand × price points), seeded from `seed` and merged per batch
+    *    by `merge`: sum, or min for the skyline. Both are mergeable
+    *    summaries, so a batch's partial fold composes losslessly with
+    *    the prefix's and the report after batch k equals the batch
+    *    query over the stream prefix.
+    *  - '''Replay.''' A batch id at or below the last folded one
+    *    returns the current state without re-folding: counts are not
+    *    replay-idempotent, and the guard keeps even the min-merge
+    *    exactly-once by construction.
+    *  - '''Restart.''' With `stateDir`, every folded batch saves a
+    *    versioned [[MonitorState]] snapshot, and the first batch a
+    *    fresh closure sees recovers (state, last batch) from the
+    *    highest committed version; a recovered snapshot supersedes
+    *    `seed`. Recovery lands exactly on the batch Structured
+    *    Streaming redelivers after a crash, which the recovered guard
+    *    then skips, so post-restart emissions equal the uninterrupted
+    *    run's (spec-pinned for all six). Gaps between the snapshot and
+    *    the delivered id are judged by [[checkBatchGap]]: small ones
+    *    log, large ones (fresh checkpoint on old state, or state
+    *    restored from an older backup) fail.
+    *  - '''Bound.''' The collect is capped at `maxKeys + 1` rows, so
+    *    the cap bounds what reaches the driver, not just the map after
+    *    an unbounded collect landed; and the MERGED size is checked
+    *    before state or guard move, so an over-bound batch leaves state
+    *    as it was and throws again when retried.
+    *
+    * Folded keys reach the driver through the snapshot codec (key
+    * columns cast to string, decoded by `codec.dec`), so one decoder
+    * serves fold and recovery. */
+  private[streaming] final class FoldMonitor[K: Ordering](monitor: String,
+      codec: FoldMonitor.Codec[K], seed: Map[K, Long],
+      stateDir: Option[String], maxKeys: Int,
+      merge: (Long, Long) => Long = _ + _)(frame: DataFrame => DataFrame) {
+    private val state = scala.collection.mutable.Map[K, Long](seed.toSeq: _*)
+    private var lastBatch = -1L
+    private var recovered = stateDir.isEmpty
+
+    def fold(batch: DataFrame, batchId: Long): scala.collection.Map[K, Long] = {
+      val spark = batch.sparkSession
+      import spark.implicits._
+      if (!recovered) {
+        MonitorState.recover(spark, stateDir.get, batchId).foreach {
+          case (v, rows) =>
+            state.clear()
+            rows.foreach { case (k1, k2, n) => state(codec.dec(k1, k2)) = n }
+            lastBatch = v
+        }
+        recovered = true
+      }
+      if (batchId > lastBatch) {
+        val f = frame(batch)
+        val keys = f.columns.init.toSeq.map(c => f(c).cast("string"))
+        val folded = f.select(keys.padTo(2, lit("")) :+ f(f.columns.last): _*)
+          .limit(maxKeys + 1).as[(String, String, Long)].collect()
+          .map { case (k1, k2, n) => (codec.dec(k1, k2), n) }
+        MonitorState.guardBound(folded.length, maxKeys, monitor)
+        MonitorState.guardBound(
+          state.size + folded.count(kv => !state.contains(kv._1)), maxKeys,
+          monitor)
+        folded.foreach { case (k, n) => state(k) = state.get(k).fold(n)(merge(_, n)) }
+        lastBatch = batchId
+        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
+          state.toSeq.sortBy(_._1).map { case (k, n) =>
+            val (k1, k2) = codec.enc(k)
+            (k1, k2, n)
+          }))
+      }
+      state
     }
   }
 
-  /** Durable snapshots for the DRIVER-HELD monitor histograms
-    * (alphaMix/benford/cusum/chiSquare/skyline) — the restart half of
-    * their prefix-bit-identity promise. Each folded batch persists the
-    * configuration-scale state map as a versioned `_SUCCESS`-gated
-    * parquet (`v<batchId>`, the langBudget convention), and a fresh
-    * closure adopts the highest committed version: recovery lands
-    * exactly at the moment Structured Streaming redelivers the last
-    * uncommitted batch, which the recovered `lastBatch` then skips —
-    * so post-crash reports equal the uninterrupted run's
-    * (spec-pinned). Snapshots are two generic string key columns + a
-    * Long value (every monitor's domain is configuration-scale, so a
-    * per-batch single-file write is artifact-dir hygiene, not a
-    * shuffle); retention keeps the last two committed versions (the
-    * previous survives any crash mid-write of the next). */
+  private[streaming] object FoldMonitor {
+    /** A monitor key ↔ the two string key columns of a snapshot row. */
+    final case class Codec[K](enc: K => (String, String),
+                              dec: (String, String) => K)
+    val Str = Codec[String](k => (k, ""), (k1, _) => k1)
+    val Num = Codec[Long](k => (k.toString, ""), (k1, _) => k1.toLong)
+    val StrStr = Codec[(String, String)](identity, (k1, k2) => (k1, k2))
+    val StrNum = Codec[(String, Long)]({ case (s, n) => (s, n.toString) },
+      (k1, k2) => (k1, k2.toLong))
+  }
+
+  /** Durable snapshots of the [[FoldMonitor]] state maps: each folded
+    * batch persists the map as a `_SUCCESS`-gated single-file parquet
+    * `v<batchId>` with two generic string key columns and a Long
+    * value (`k1, k2, v`; every domain is configuration-scale, so the
+    * single file is artifact-dir hygiene, not a shuffle). Retention
+    * keeps the last two versions, so the previous one survives a
+    * crash mid-write of the next. */
   private[streaming] object MonitorState {
     def recover(spark: SparkSession, dir: String, batchId: Long)
-        : Option[(Long, Seq[(String, String, Long)])] = {
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) return None
-      val committed = fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-        .filter(v => fs.exists(
-          new org.apache.hadoop.fs.Path(root, s"v$v/_SUCCESS")))
-      if (committed.isEmpty) None
-      else {
-        val v = committed.max
-        // same gap-bounded coherence rule as recoverBatchStamp: a
-        // small gap is a checkpoint rewind (replays re-emit from
-        // recovered state, convergent); a large one means a fresh
-        // checkpoint against old state — silent no-op effectively
-        // forever if allowed
-        if (v - batchId > RewindTolerance) throw new IllegalStateException(
-          s"monitor state at $dir was committed through batch $v but " +
-            s"this query delivered batch $batchId (gap > " +
-            s"$RewindTolerance) — a fresh checkpoint is running against " +
-            "old state; reset the state dir together with the checkpoint " +
-            "(or use a fresh state dir)")
-        // the SYMMETRIC mismatch: delivered id far AHEAD of the
-        // snapshot means the state dir was restored from an older
-        // backup under a current checkpoint — adopting it silently
-        // loses every batch in the gap (emissions undercount with no
-        // signal), so the guard mirrors the rewind side: small gaps
-        // log loudly (a batch may legitimately commit no snapshot),
-        // large gaps fail with the restore-both remedy
-        if (batchId - v > RewindTolerance) throw new IllegalStateException(
-          s"monitor state at $dir was committed through batch $v but " +
-            s"this query delivered batch $batchId (gap > " +
-            s"$RewindTolerance) — the state dir was restored from an " +
-            "older backup than the checkpoint; restore state dir and " +
-            "checkpoint together (or reset both)")
-        if (batchId - v > 1) System.err.println(
-          s"[graft] monitor state at $dir committed through batch $v, " +
-            s"query delivered batch $batchId: the ${batchId - v - 1} " +
-            "batch(es) in the gap are not in the recovered state — " +
-            "their contributions are lost unless redelivered")
-        if (batchId < v) System.err.println(
-          s"[graft] monitor state at $dir committed through batch $v, " +
-            s"query delivered batch $batchId: treating as a checkpoint " +
-            "rewind — replayed batches re-emit without re-folding")
+        : Option[(Long, Seq[(String, String, Long)])] =
+      committedVersion(spark, dir).map { v =>
+        checkBatchGap("monitor state", dir, v, batchId)
         import spark.implicits._
-        Some((v, spark.read.parquet(s"$dir/v$v")
-          .as[(String, String, Long)].collect().toSeq))
+        (v, spark.read.parquet(s"$dir/v$v")
+          .as[(String, String, Long)].collect().toSeq)
       }
-    }
 
     def save(spark: SparkSession, dir: String, batchId: Long,
              rows: Seq[(String, String, Long)]): Unit = {
@@ -1325,15 +1141,12 @@ object EventStream {
         .write.mode("overwrite").parquet(s"$dir/v$batchId")
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(root).map(_.getPath.getName).filter(_.matches("v\\d+"))
-        .map(_.drop(1).toLong).sorted.dropRight(2)
+      versions(fs, root).sorted.dropRight(2)
         .foreach(v => fs.delete(
           new org.apache.hadoop.fs.Path(root, s"v$v"), true))
     }
 
-    /** The driver-map bound made EXPLICIT: every monitor's contract is
-      * a configuration-scale key domain (languages, digits, segments ×
-      * nations, brand × price points). Nothing structural stops a
+    /** The driver-map bound made EXPLICIT: nothing structural stops a
       * caller wiring a high-cardinality stream in, and unbounded
       * driver state fails late and opaquely (heap) — so the fold
       * fails FAST with the contract named instead. */
@@ -1344,67 +1157,99 @@ object EventStream {
           "stream or raise maxKeys deliberately")
   }
 
-  /** How far an incoming batch id may sit BELOW a recovered stamp
-    * before it reads as a checkpoint/artifact mismatch rather than a
-    * rewind. Two indistinguishable-at-recovery cases share that
-    * signature: (a) a checkpoint restored from backup while the
-    * artifact kept its newer state — the replayed ids re-deliver data
-    * the artifact already folded, so skipping them is exactly right
-    * and ids catch up within the rewind window; (b) a FRESH checkpoint
-    * (ids reset to 0) against an old artifact — every new batch below
-    * the stamp is silently dropped until ids crawl past it, which for
-    * a long-lived artifact is effectively forever. The damage of a
-    * wrong skip is proportional to the gap, so small gaps are treated
-    * as (a) with a loud log line and large gaps fail as (b): restore
-    * artifact and checkpoint together, or reset both. */
+  private def versions(fs: org.apache.hadoop.fs.FileSystem,
+                       root: org.apache.hadoop.fs.Path): Array[Long] =
+    fs.listStatus(root).map(_.getPath.getName).filter(_.matches("v\\d+"))
+      .map(_.drop(1).toLong)
+
+  /** The highest `v<id>` under `dir` whose every named half committed
+    * (`<half><id>/_SUCCESS` exists): [[MonitorState]]'s one-half
+    * snapshots, and the kanon/langBudget state pairs (the value-scale
+    * `v` parquet plus the driver histogram beside it — a crash between
+    * the two writes falls back to the previous version). */
+  private def committedVersion(spark: SparkSession, dir: String,
+                               halves: Seq[String] = Seq("v")): Option[Long] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) None
+    else versions(fs, root).filter(v => halves.forall(h =>
+      fs.exists(new org.apache.hadoop.fs.Path(root, s"$h$v/_SUCCESS"))))
+      .maxOption
+  }
+
+  private def dirExists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** How far a delivered batch id may sit from the recovered one before
+    * it reads as a checkpoint/state mismatch rather than a rewind. */
   private[streaming] val RewindTolerance = 64L
 
-  /** Recovery-time stamp read WITH the coherence guard above — in
-    * BOTH directions, so the artifact maintainers (histogram / top-k /
-    * CMS, and the drift monitors composed on them) share the
-    * [[MonitorState]] recovery contract uniformly. Below-stamp gaps
-    * are [[RewindTolerance]]'s two cases (rewind vs fresh
-    * checkpoint). The SYMMETRIC mismatch — the delivered id far AHEAD
-    * of the stamp — is an artifact dir restored from an OLDER backup
-    * than the checkpoint: the gap batches' contributions are not in
-    * the recovered artifact and will never be redelivered, so
-    * adopting the stale counts silently undercounts forever; small
-    * ahead gaps log loudly instead, large ones fail with the
-    * restore-both remedy. The guard is sound because NO-OP batches
-    * also advance the stamp once the dir exists ([[stampNoOpBatch]])
-    * — a long-idle stream never accumulates a gap: the only benign
-    * ahead gap left is the one-batch crash window (data written,
-    * stamp not yet), and pre-first-data idling reads as stamp −1,
-    * which skips the guard entirely. The stamp protocol assumes batch
-    * ids are monotone over the artifact's lifetime — true while
-    * artifact and checkpoint live and die together. Guards apply only
-    * when a stamp EXISTS: starting a fresh artifact mid-stream
-    * (stamp −1, any first id) is the caller's deliberate choice, as
-    * with a fresh [[MonitorState]] dir. */
+  /** The gap-coherence rule of every durable recovery ([[FoldMonitor]]
+    * snapshots and [[stampedForeachBatch]] stamps): `through` is the
+    * last batch the recovered `kind` holds, `batchId` the first one a
+    * fresh closure is delivered.
+    *
+    * BELOW: two cases look the same at recovery. (a) A checkpoint
+    * restored from backup while the state kept its newer contents —
+    * the replayed ids re-deliver batches already folded, so skipping
+    * them is right and ids catch up. (b) A FRESH checkpoint (ids reset
+    * to 0) against old state — every batch below `through` would be
+    * silently skipped until ids crawl past it, effectively forever.
+    * The damage of a wrong skip grows with the gap, so gaps up to
+    * [[RewindTolerance]] are treated as (a) with a stderr line and
+    * larger ones fail as (b).
+    *
+    * AHEAD: state restored from an OLDER backup than the checkpoint —
+    * the gap batches are not in the state and will never be
+    * redelivered, so adopting it undercounts with no signal. Gaps of
+    * one are the normal next batch; small ones log the lost batches
+    * (a crash between a data write and its stamp leaves one); large
+    * ones fail with the restore-both remedy. */
+  private def checkBatchGap(kind: String, dir: String, through: Long,
+                            batchId: Long): Unit = {
+    val mismatch = s"$kind at $dir was committed through batch $through " +
+      s"but this query delivered batch $batchId (gap > $RewindTolerance) — "
+    if (through - batchId > RewindTolerance) throw new IllegalStateException(
+      mismatch + "a fresh checkpoint is running against old state; reset " +
+        s"the $kind dir together with the checkpoint (or use a fresh dir)")
+    if (batchId - through > RewindTolerance) throw new IllegalStateException(
+      mismatch + s"the $kind dir was restored from an older backup than " +
+        s"the checkpoint; restore $kind dir and checkpoint together (or " +
+        "reset both)")
+    val gap = s"[graft] $kind at $dir committed through batch $through, " +
+      s"query delivered batch $batchId: "
+    if (batchId - through > 1) System.err.println(gap +
+      s"the ${batchId - through - 1} batch(es) in the gap are not in the " +
+      s"recovered $kind — their contributions are lost unless redelivered")
+    if (batchId < through) System.err.println(gap +
+      "treating as a checkpoint rewind — replayed batches re-emit without " +
+      "re-folding until ids pass the committed one")
+  }
+
+  /** The durable batch stamp `_graft_last_batch`, −1 when absent. A
+    * torn or empty stamp (crash mid-write on a filesystem without
+    * atomic rename) degrades to −1 — the one-batch at-least-once
+    * window — rather than bricking the stream with a parse error on
+    * every restart. */
+  private def readBatchStamp(spark: SparkSession, dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir, "_graft_last_batch")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) -1L
+    else {
+      val in = fs.open(p)
+      try {
+        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+        try s.toLong catch { case _: NumberFormatException => -1L }
+      } finally in.close()
+    }
+  }
+
   private def recoverBatchStamp(spark: SparkSession, dir: String,
                                 batchId: Long): Long = {
     val stamp = readBatchStamp(spark, dir)
-    if (stamp - batchId > RewindTolerance) throw new IllegalStateException(
-      s"artifact at $dir was maintained through batch $stamp but this " +
-        s"query delivered batch $batchId (gap > $RewindTolerance) — a " +
-        "fresh checkpoint is running against an old artifact; reset the " +
-        "artifact dir together with the checkpoint (or use a fresh dir)")
-    if (stamp >= 0 && batchId - stamp > RewindTolerance)
-      throw new IllegalStateException(
-        s"artifact at $dir was maintained through batch $stamp but this " +
-          s"query delivered batch $batchId (gap > $RewindTolerance) — " +
-          "the artifact dir was restored from an older backup than the " +
-          "checkpoint; restore artifact and checkpoint together (or " +
-          "reset both)")
-    if (stamp >= 0 && batchId - stamp > 1) System.err.println(
-      s"[graft] artifact at $dir stamped through batch $stamp, query " +
-        s"delivered batch $batchId: the ${batchId - stamp - 1} batch(es) " +
-        "in the gap are not in the artifact — their contributions are " +
-        "lost unless redelivered")
-    if (batchId < stamp) System.err.println(
-      s"[graft] artifact at $dir stamped through batch $stamp, query " +
-        s"delivered batch $batchId: treating as a checkpoint rewind — " +
-        "replayed batches skip-fold until ids pass the stamp")
+    if (stamp >= 0) checkBatchGap("artifact", dir, stamp, batchId)
     stamp
   }
 
@@ -1429,63 +1274,92 @@ object EventStream {
     }
   }
 
-  /** Advance the durable stamp for a NO-OP batch — a batch that folded
-    * nothing still HAPPENED: empty (or fully-filtered) micro-batches
-    * are routine in Structured Streaming, and if they never stamped, a
-    * long-idle stream would accumulate an arbitrary stamp↔checkpoint
-    * gap with zero data lost — and the next restart's ahead-gap guard
-    * ([[recoverBatchStamp]]) would misread the healthy pair as an
-    * older-backup restore and wedge the stream permanently (the sink
-    * throws before any fold can ever advance the stamp). Stamps only
-    * when the artifact dir already exists: creating the dir for a
-    * bare stamp would commit a data-less dir whose schema the next
-    * read cannot infer — and while no data exists the recovery guard
-    * is skipped anyway (stamp −1 reads as a fresh artifact). */
-  private def stampNoOpBatch(spark: SparkSession, dir: String,
-                             batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) writeBatchStamp(spark, dir, batchId)
-  }
-
-  def histogramArtifactForeachBatch(dir: String, keyCols: Seq[String])(
-      onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit = {
+  /** The stamped-artifact skeleton: histogramArtifact, indexHealth,
+    * topkArtifact, cmsArtifact, cmsCells and annUpsert each supply only
+    * `write`, which folds one batch into the artifact at `dir` and
+    * returns whether it wrote anything, and `emit`, which runs after
+    * every delivered batch. The durability contract, written once:
+    *
+    *  - '''Replay.''' Count addition, index appends and upserts are not
+    *    replay-idempotent (unlike the HLL union in
+    *    [[overlapHllForeachBatch]]), so a batch id at or below the last
+    *    written one skips `write` and only emits.
+    *  - '''Restart.''' The guard is durable: the stamp
+    *    `_graft_last_batch` is a `_`-prefixed file inside `dir`
+    *    (invisible to Spark's file index, travelling with the
+    *    artifact), and the first batch a fresh closure sees recovers
+    *    it, so a post-crash redelivery merges nothing. Gaps between the
+    *    stamp and the delivered id are judged by [[checkBatchGap]];
+    *    a fresh artifact (no stamp) accepts any first id, the caller's
+    *    deliberate choice as with a fresh [[MonitorState]] dir.
+    *  - '''Crash window.''' The stamp is written (write-then-rename,
+    *    never torn) AFTER the artifact: a crash between the two leaves
+    *    that one batch at-least-once — re-merged on redelivery.
+    *  - '''Idle batches.''' A batch that wrote nothing still happened:
+    *    it advances the stamp once `dir` exists, so a long-idle stream
+    *    never builds a stamp↔checkpoint gap that the next restart
+    *    would misread as an older-backup restore and fail on forever.
+    *    Before the first write there is no dir to stamp (creating one
+    *    for a bare stamp would commit a data-less dir whose schema the
+    *    next read cannot infer), and a missing stamp skips the gap
+    *    check anyway. `write` must likewise write nothing for an empty
+    *    batch. */
+  private def stampedForeachBatch(dir: String)(write: DataFrame => Boolean)(
+      emit: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     var lastBatch = -1L
-    val allKeys = "day" +: keyCols :+ "v"
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
       if (lastBatch < 0) lastBatch = recoverBatchStamp(spark, dir, batchId)
       if (batchId > lastBatch) {
-        val newCounts = batch
-          .groupBy(allKeys.map(col): _*).agg(count(lit(1)).as("cnt"))
-        val touched = newCounts.select("day").distinct().collect()
-          .map(_.get(0)).toSeq
-        // empty micro-batches are normal in Structured Streaming; an
-        // unguarded write would commit a data-less artifact dir whose
-        // schema the NEXT batch's read cannot infer, wedging the
-        // stream. Nothing to merge ⇒ nothing to write — but the stamp
-        // still advances once the dir exists ([[stampNoOpBatch]]: an
-        // idle stream must not accumulate a stamp↔checkpoint gap the
-        // recovery guard would misread as an older-backup restore).
-        if (touched.nonEmpty) {
-          val target = new org.apache.hadoop.fs.Path(dir)
-          val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val existing =
-            if (fs.exists(target))
-              Some(spark.read.parquet(dir)
-                .filter(col("day").isin(touched: _*))
-                .select((allKeys :+ "cnt").map(col): _*))
-            else None
-          val merged = existing.fold(newCounts)(_.unionByName(newCounts))
-            .groupBy(allKeys.map(col): _*).agg(sum("cnt").as("cnt"))
-            .localCheckpoint(true)
-          graft.sources.Writers.overwritePartitions(merged, dir, Seq("day"))
+        if (write(batch) || dirExists(spark, dir))
           writeBatchStamp(spark, dir, batchId)
-        } else stampNoOpBatch(spark, dir, batchId)
         lastBatch = batchId
       }
-      onUpdated(batchId)
+      emit(batch, batchId)
     }
+  }
+
+  /** Streaming histogram-artifact maintenance (#194) — the producer
+    * side of the q75/q57 artifact consumers run from a stream: keep a
+    * day-partitioned (day, keys…, v) → count histogram table current
+    * as events arrive, so the no-rescan drift/winsorize/quantile
+    * consumers always have tonight's artifact without a batch job.
+    * Per micro-batch: the batch reduces to its own counts, the
+    * TOUCHED days' stored rows (and only those — a batch near the
+    * frontier touches 1–2 partitions however long the history) merge
+    * in by count addition, and #158's dynamic-partition overwrite
+    * swaps exactly those day partitions. The merged frame is
+    * materialized through a checkpoint first — it READS the very
+    * files the overwrite replaces (the AnnIndex.maintain
+    * materialize-before-overwrite hazard class). Count addition is
+    * associative, so the final table is bit-identical to a one-shot
+    * batch [[graft.sources.SketchStore.saveHistogram]] over the whole
+    * stream (spec-pinned). Replay and restart: the
+    * [[stampedForeachBatch]] contract. Batch schema: `day` +
+    * `keyCols` + `v`. */
+  def histogramArtifactForeachBatch(dir: String, keyCols: Seq[String])(
+      onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit = {
+    val allKeys = "day" +: keyCols :+ "v"
+    stampedForeachBatch(dir) { batch =>
+      val spark = batch.sparkSession
+      val newCounts = batch
+        .groupBy(allKeys.map(col): _*).agg(count(lit(1)).as("cnt"))
+      val touched = newCounts.select("day").distinct().collect()
+        .map(_.get(0)).toSeq
+      if (touched.nonEmpty) {
+        val existing =
+          if (dirExists(spark, dir))
+            Some(spark.read.parquet(dir)
+              .filter(col("day").isin(touched: _*))
+              .select((allKeys :+ "cnt").map(col): _*))
+          else None
+        val merged = existing.fold(newCounts)(_.unionByName(newCounts))
+          .groupBy(allKeys.map(col): _*).agg(sum("cnt").as("cnt"))
+          .localCheckpoint(true)
+        graft.sources.Writers.overwritePartitions(merged, dir, Seq("day"))
+      }
+      touched.nonEmpty
+    }((_, batchId) => onUpdated(batchId))
   }
 
   /** Streaming index-health monitor (#323) — the r14 hot-cell gate
@@ -1495,33 +1369,24 @@ object EventStream {
     * ([[graft.sim.AnnIndex.hotCellSignal]]) is evaluated and emitted
     * PER BATCH, so the geometry drift recall audits cannot see (probe
     * cost ∝ probed cell MASS — the GEOCHECK r13 finding) surfaces
-    * while it grows, not at the next maintenance window. Append is
-    * not replay-idempotent (a replayed batch would double its
-    * vectors), so the index dir carries the same durable batch stamp
-    * as the artifact maintainers: replayed ids SKIP the append but
-    * still emit the health row (idempotent from current state), and
-    * the stamp's one narrow at-least-once window (crash between
-    * append and stamp) re-appends exactly one batch — duplicate
-    * (id, vec) rows score identically, so a top-k list can carry a
-    * duplicate id until the next rebuild/compaction purges it; the
-    * window is the histogramArtifactForeachBatch contract, documented
-    * there. Batch schema: (id, vec) + the index's metadata columns.
+    * while it grows, not at the next maintenance window. Replay and
+    * restart: the [[stampedForeachBatch]] contract — replayed ids skip
+    * the append but still emit the health row (idempotent from
+    * current state); inside the crash window a re-appended batch's
+    * duplicate (id, vec) rows score identically, so a top-k list can
+    * carry a duplicate id until the next rebuild/compaction purges
+    * it. Batch schema: (id, vec) + the index's metadata columns.
     * Health row: (batch_id, n_vectors, max_cell, occupancy_target,
     * hot, suggested_n_cells) — the signal's metadata-only census, no
     * vector reads. */
   def indexHealthForeachBatch(dir: String, maxMultiple: Long = 3L)(
-      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    var lastBatch = -1L
-    (batch: DataFrame, batchId: Long) => {
+      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    stampedForeachBatch(dir) { batch =>
+      val wrote = !batch.isEmpty
+      if (wrote) graft.sim.AnnIndex.append(batch, dir)
+      wrote
+    } { (batch, batchId) =>
       val spark = batch.sparkSession
-      if (lastBatch < 0) lastBatch = recoverBatchStamp(spark, dir, batchId)
-      if (batchId > lastBatch) {
-        if (!batch.isEmpty) {
-          graft.sim.AnnIndex.append(batch, dir)
-          writeBatchStamp(spark, dir, batchId)
-        } else stampNoOpBatch(spark, dir, batchId)
-        lastBatch = batchId
-      }
       val sig = graft.sim.AnnIndex.hotCellSignal(spark, dir, maxMultiple)
       import spark.implicits._
       onReport(Seq((batchId, sig.nVec, sig.maxCell, sig.target,
@@ -1529,7 +1394,6 @@ object EventStream {
         .toDF("batch_id", "n_vectors", "max_cell", "occupancy_target",
           "hot", "suggested_n_cells"), batchId)
     }
-  }
 
   /** Streaming KS drift monitor (#292) — q111/q112's streaming twin,
     * built as a COMPOSITION of two already-verified pieces rather
@@ -1598,9 +1462,7 @@ object EventStream {
       // monitor, the artifact consumer and the raw scan agree
       fold(batch.filter(col("v").isNotNull), batchId)
       val spark = batch.sparkSession
-      val target = new org.apache.hadoop.fs.Path(dir)
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(target)) {
+      if (dirExists(spark, dir)) {
         def window(pred: org.apache.spark.sql.Column, out: String): DataFrame =
           spark.read.parquet(dir).filter(pred)
             .groupBy(col("event_type"), col("v").as("cents"))
@@ -1627,63 +1489,49 @@ object EventStream {
     * [[graft.sources.SketchStore.saveTopKGrouped]] over the whole
     * stream (spec-pinned with days straddling batches); in the
     * eviction regime each day's buffer keeps the summed Σn/capacity
-    * bound. Replayed batch ids merge nothing — across restarts too
-    * (durable batch stamp, [[readBatchStamp]]). Batch schema: `day` +
-    * `item`. */
+    * bound. Replay and restart: the [[stampedForeachBatch]] contract.
+    * Batch schema: `day` + `item`. */
   def topkArtifactForeachBatch(dir: String, capacity: Int)(
-      onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit = {
-    var lastBatch = -1L
-    (batch: DataFrame, batchId: Long) => {
+      onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit =
+    stampedForeachBatch(dir) { batch =>
       val spark = batch.sparkSession
       import spark.implicits._
-      if (lastBatch < 0) lastBatch = recoverBatchStamp(spark, dir, batchId)
-      if (batchId > lastBatch) {
-        val hh = new graft.functions.HeavyHitters(capacity, capacity)
-        val newBuf = batch
-          .select(col("day").cast(org.apache.spark.sql.types.StringType),
-            col("item").cast(org.apache.spark.sql.types.StringType))
-          .as[(String, String)]
-          .groupByKey(_._1).mapValues(_._2)
-          .agg(hh.toColumn.name("counters"))
-          .collect().toMap
-        // empty batch ⇒ nothing to merge or write (an unguarded empty
-        // write commits a data-less dir the next read cannot infer);
-        // the stamp still advances once the dir exists (stampNoOpBatch
-        // — the histogram maintainer's idle-gap rule)
-        if (newBuf.nonEmpty) {
-          val target = new org.apache.hadoop.fs.Path(dir)
-          val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val stored: Map[String, Seq[(String, Long)]] =
-            if (fs.exists(target))
-              spark.read.parquet(dir)
-                .filter(col("grp").isin(newBuf.keys.toSeq: _*))
-                .select(col("grp").cast(org.apache.spark.sql.types.StringType),
-                  col("item"), col("cnt"))
-                .as[(String, String, Long)].collect()
-                .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
-            else Map.empty
-          val merged = newBuf.toSeq.sortBy(_._1).flatMap { case (day, counters) =>
-            val m = scala.collection.mutable.Map(counters: _*)
-            val out = stored.get(day) match {
-              case Some(old) =>
-                hh.merge(scala.collection.mutable.Map(old: _*), m)
-              case None => m
-            }
-            out.toSeq.map { case (it, n) => (day, it, n) }
+      val hh = new graft.functions.HeavyHitters(capacity, capacity)
+      val newBuf = batch
+        .select(col("day").cast(org.apache.spark.sql.types.StringType),
+          col("item").cast(org.apache.spark.sql.types.StringType))
+        .as[(String, String)]
+        .groupByKey(_._1).mapValues(_._2)
+        .agg(hh.toColumn.name("counters"))
+        .collect().toMap
+      if (newBuf.nonEmpty) {
+        val stored: Map[String, Seq[(String, Long)]] =
+          if (dirExists(spark, dir))
+            spark.read.parquet(dir)
+              .filter(col("grp").isin(newBuf.keys.toSeq: _*))
+              .select(col("grp").cast(org.apache.spark.sql.types.StringType),
+                col("item"), col("cnt"))
+              .as[(String, String, Long)].collect()
+              .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
+          else Map.empty
+        val merged = newBuf.toSeq.sortBy(_._1).flatMap { case (day, counters) =>
+          val m = scala.collection.mutable.Map(counters: _*)
+          val out = stored.get(day) match {
+            case Some(old) =>
+              hh.merge(scala.collection.mutable.Map(old: _*), m)
+            case None => m
           }
-          merged.toDF("grp", "item", "cnt")
-            .withColumn("capacity", lit(capacity))
-            .repartition(col("grp"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("grp").parquet(dir)
-          writeBatchStamp(spark, dir, batchId)
-        } else stampNoOpBatch(spark, dir, batchId)
-        lastBatch = batchId
+          out.toSeq.map { case (it, n) => (day, it, n) }
+        }
+        merged.toDF("grp", "item", "cnt")
+          .withColumn("capacity", lit(capacity))
+          .repartition(col("grp"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("grp").parquet(dir)
       }
-      onUpdated(batchId)
-    }
-  }
+      newBuf.nonEmpty
+    }((_, batchId) => onUpdated(batchId))
 
   /** Streaming CMS-artifact maintenance (#225) — #194/#208's sibling
     * for the count-min family: keep the per-day point-frequency grids
@@ -1696,71 +1544,60 @@ object EventStream {
     * partitions. Addition is associative and commutative, so the
     * maintained table answers every point query EXACTLY as a one-shot
     * [[graft.sources.SketchStore.saveCmsGrouped]] over the whole
-    * stream (spec-pinned estimate parity); replayed batch ids merge
-    * nothing — across restarts too (durable batch stamp,
-    * [[readBatchStamp]]). Batch schema: `day` + `item`; artifact
-    * schema matches saveCmsGrouped, so
+    * stream (spec-pinned estimate parity). Replay and restart: the
+    * [[stampedForeachBatch]] contract. Batch schema: `day` + `item`;
+    * artifact schema matches saveCmsGrouped, so
     * [[graft.sources.SketchStore.cmsEstimates]] serves both. */
   def cmsArtifactForeachBatch(dir: String, eps: Double = 0.0005,
                               confidence: Double = 0.99, seed: Int = 42)(
       onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit = {
-    var lastBatch = -1L
     val epsE6 = math.round(eps * 1e6)
-    (batch: DataFrame, batchId: Long) => {
+    stampedForeachBatch(dir) { batch =>
       val spark = batch.sparkSession
       import spark.implicits._
-      if (lastBatch < 0) lastBatch = recoverBatchStamp(spark, dir, batchId)
-      if (batchId > lastBatch) {
-        import org.apache.spark.util.sketch.CountMinSketch
-        val newRows = batch
-          .groupBy(col("day").cast(org.apache.spark.sql.types.StringType)
-            .as("grp"))
-          .agg(count_min_sketch(
-              col("item").cast(org.apache.spark.sql.types.StringType),
-              lit(eps), lit(confidence), lit(seed)).as("cms"),
-            count(lit(1)).as("n_items"))
-          .as[(String, Array[Byte], Long)].collect()
-        // empty batch ⇒ nothing to merge or write; the stamp still
-        // advances once the dir exists (the idle-gap rule)
-        if (newRows.nonEmpty) {
-          val target = new org.apache.hadoop.fs.Path(dir)
-          val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val stored: Map[String, (Array[Byte], Long)] =
-            if (fs.exists(target))
-              spark.read.parquet(dir)
-                .filter(col("grp").isin(newRows.map(_._1).toSeq: _*))
-                .select(col("grp")
-                  .cast(org.apache.spark.sql.types.StringType),
-                  col("cms"), col("n_items"))
-                .as[(String, Array[Byte], Long)].collect()
-                .map(r => r._1 -> (r._2, r._3)).toMap
-            else Map.empty
-          val merged = newRows.toSeq.sortBy(_._1).map { case (day, cms, n) =>
-            stored.get(day) match {
-              case Some((old, oldN)) =>
-                val a = CountMinSketch.readFrom(
-                  new java.io.ByteArrayInputStream(old))
-                a.mergeInPlace(CountMinSketch.readFrom(
-                  new java.io.ByteArrayInputStream(cms)))
-                val bos = new java.io.ByteArrayOutputStream()
-                a.writeTo(bos)
-                (day, bos.toByteArray, oldN + n)
-              case None => (day, cms, n)
-            }
+      import org.apache.spark.util.sketch.CountMinSketch
+      val newRows = batch
+        .groupBy(col("day").cast(org.apache.spark.sql.types.StringType)
+          .as("grp"))
+        .agg(count_min_sketch(
+            col("item").cast(org.apache.spark.sql.types.StringType),
+            lit(eps), lit(confidence), lit(seed)).as("cms"),
+          count(lit(1)).as("n_items"))
+        .as[(String, Array[Byte], Long)].collect()
+      if (newRows.nonEmpty) {
+        val stored: Map[String, (Array[Byte], Long)] =
+          if (dirExists(spark, dir))
+            spark.read.parquet(dir)
+              .filter(col("grp").isin(newRows.map(_._1).toSeq: _*))
+              .select(col("grp")
+                .cast(org.apache.spark.sql.types.StringType),
+                col("cms"), col("n_items"))
+              .as[(String, Array[Byte], Long)].collect()
+              .map(r => r._1 -> (r._2, r._3)).toMap
+          else Map.empty
+        val merged = newRows.toSeq.sortBy(_._1).map { case (day, cms, n) =>
+          stored.get(day) match {
+            case Some((old, oldN)) =>
+              val a = CountMinSketch.readFrom(
+                new java.io.ByteArrayInputStream(old))
+              a.mergeInPlace(CountMinSketch.readFrom(
+                new java.io.ByteArrayInputStream(cms)))
+              val bos = new java.io.ByteArrayOutputStream()
+              a.writeTo(bos)
+              (day, bos.toByteArray, oldN + n)
+            case None => (day, cms, n)
           }
-          merged.toDF("grp", "cms", "n_items")
-            .withColumn("eps_e6", lit(epsE6))
-            .withColumn("seed", lit(seed))
-            .repartition(col("grp"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("grp").parquet(dir)
-          writeBatchStamp(spark, dir, batchId)
-        } else stampNoOpBatch(spark, dir, batchId)
-        lastBatch = batchId
+        }
+        merged.toDF("grp", "cms", "n_items")
+          .withColumn("eps_e6", lit(epsE6))
+          .withColumn("seed", lit(seed))
+          .repartition(col("grp"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("grp").parquet(dir)
       }
-      onUpdated(batchId)
-    }
+      newRows.nonEmpty
+    }((_, batchId) => onUpdated(batchId))
   }
 
   /** Streaming FORGET propagation into the CMS artifacts (#234) —
@@ -1788,58 +1625,47 @@ object EventStream {
     * its stale pre-erasure partition would survive the purge — the
     * zero row is the day's erasure record, and every consumer
     * ([[graft.sources.SketchStore.mergedCmsCells]]) drops it on read
-    * (the fully-netted-day case is spec-pinned). Replayed batch ids
-    * merge nothing, across restarts too (durable batch stamp).
-    * Batch schema: `day`, `item`, `wt`. */
+    * (the fully-netted-day case is spec-pinned). Replay and restart:
+    * the [[stampedForeachBatch]] contract. Batch schema: `day`,
+    * `item`, `wt`. */
   def cmsCellsForeachBatch(dir: String, depth: Int = 4, width: Int = 512)(
-      onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit = {
-    var lastBatch = -1L
-    (batch: DataFrame, batchId: Long) => {
+      onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit =
+    stampedForeachBatch(dir) { batch =>
       val spark = batch.sparkSession
       import graft.sources.SketchStore
-      if (lastBatch < 0) lastBatch = recoverBatchStamp(spark, dir, batchId)
-      if (batchId > lastBatch) {
-        val newCells = batch
-          .select(col("day").cast(org.apache.spark.sql.types.StringType)
-              .as("grp"),
-            col("item").cast(org.apache.spark.sql.types.StringType).as("it"),
-            col("wt").cast(org.apache.spark.sql.types.LongType).as("wt"))
-          .select(col("grp"), col("it"), col("wt"),
-            explode(expr(s"sequence(0, ${depth - 1})")).as("r"))
-          .groupBy(col("grp"), col("r"),
-            SketchStore.cmsCellIndex(col("it"), col("r"), width).as("c"))
-          .agg(sum("wt").as("cnt"))
-        val touched = newCells.select("grp").distinct()
-          .collect().map(_.getString(0)).toSeq
-        // empty batch ⇒ nothing to merge or write; the stamp still
-        // advances once the dir exists (the idle-gap rule)
-        if (touched.nonEmpty) {
-          val target = new org.apache.hadoop.fs.Path(dir)
-          val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val stored =
-            if (fs.exists(target)) {
-              val s = spark.read.parquet(dir)
-                .filter(col("grp").isin(touched: _*))
-              val params = s.select("depth", "width").distinct()
-                .collect().map(r => (r.getInt(0), r.getInt(1)))
-              require(params.forall(_ == (depth, width)),
-                s"stored grids are ${params.toSeq}, maintainer runs ($depth, $width)")
-              s.select("grp", "r", "c", "cnt")
-            } else newCells.limit(0)
-          stored.unionByName(newCells)
-            .groupBy("grp", "r", "c").agg(sum("cnt").as("cnt"))
-            .withColumn("depth", lit(depth)).withColumn("width", lit(width))
-            .repartition(col("grp"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("grp").parquet(dir)
-          writeBatchStamp(spark, dir, batchId)
-        } else stampNoOpBatch(spark, dir, batchId)
-        lastBatch = batchId
+      val newCells = batch
+        .select(col("day").cast(org.apache.spark.sql.types.StringType)
+            .as("grp"),
+          col("item").cast(org.apache.spark.sql.types.StringType).as("it"),
+          col("wt").cast(org.apache.spark.sql.types.LongType).as("wt"))
+        .select(col("grp"), col("it"), col("wt"),
+          explode(expr(s"sequence(0, ${depth - 1})")).as("r"))
+        .groupBy(col("grp"), col("r"),
+          SketchStore.cmsCellIndex(col("it"), col("r"), width).as("c"))
+        .agg(sum("wt").as("cnt"))
+      val touched = newCells.select("grp").distinct()
+        .collect().map(_.getString(0)).toSeq
+      if (touched.nonEmpty) {
+        val stored =
+          if (dirExists(spark, dir)) {
+            val s = spark.read.parquet(dir)
+              .filter(col("grp").isin(touched: _*))
+            val params = s.select("depth", "width").distinct()
+              .collect().map(r => (r.getInt(0), r.getInt(1)))
+            require(params.forall(_ == (depth, width)),
+              s"stored grids are ${params.toSeq}, maintainer runs ($depth, $width)")
+            s.select("grp", "r", "c", "cnt")
+          } else newCells.limit(0)
+        stored.unionByName(newCells)
+          .groupBy("grp", "r", "c").agg(sum("cnt").as("cnt"))
+          .withColumn("depth", lit(depth)).withColumn("width", lit(width))
+          .repartition(col("grp"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("grp").parquet(dir)
       }
-      onUpdated(batchId)
-    }
-  }
+      touched.nonEmpty
+    }((_, batchId) => onUpdated(batchId))
 
   /** Streaming ANN index upsert (#239) — the CDC pipe into the
     * persisted vector store (#136), composing [[graft.sim.AnnIndex
@@ -1847,40 +1673,29 @@ object EventStream {
     * their ids' current versions and its `I`/`U` rows replace theirs
     * (tombstone + next-generation append — O(batch), never a cell
     * rewrite), so a re-embedded or erased document reaches serving
-    * within one batch. Replay-safe TWICE over: the durable batch
-    * stamp (at the index ROOT — `cells/` is overwritten by purge/
-    * rebuild, the stamp must survive both) skips redelivered ids,
-    * and even inside the stamp's narrow at-least-once window a
-    * replayed upsert is SELF-HEALING — its delete-at-current-gen
-    * retires the crashed run's append before re-appending, so probes
-    * are bit-identical (spec-pinned), unlike a bare re-append which
-    * would rank the same vector twice. Batch schema: `op` ("I"/"U"/
-    * "D"), `id`, `vec` (+ metadata columns riding into the cells). */
+    * within one batch. Replay-safe TWICE over: the
+    * [[stampedForeachBatch]] contract (stamp at the index ROOT —
+    * `cells/` is overwritten by purge/rebuild, the stamp must survive
+    * both) skips redelivered ids, and even inside the stamp's crash
+    * window a replayed upsert is SELF-HEALING — its
+    * delete-at-current-gen retires the crashed run's append before
+    * re-appending, so probes are bit-identical (spec-pinned), unlike
+    * a bare re-append which would rank the same vector twice. Batch
+    * schema: `op` ("I"/"U"/"D"), `id`, `vec` (+ metadata columns
+    * riding into the cells). */
   def annUpsertForeachBatch(indexDir: String)(
       onApplied: Long => Unit = _ => ()): (DataFrame, Long) => Unit = {
     import graft.sim.AnnIndex
-    var lastBatch = -1L
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      if (lastBatch < 0) lastBatch = recoverBatchStamp(spark, indexDir, batchId)
-      if (batchId > lastBatch) {
-        // the batch frame feeds two writes — materialize once
-        val b = batch.localCheckpoint(true)
-        val dels = b.filter(col("op") === "D").select("id")
-        val ups = b.filter(col("op") =!= "D").drop("op")
-        val applied =
-          (if (dels.isEmpty) false
-           else { AnnIndex.delete(dels, indexDir); true }) |
-          (if (ups.isEmpty) false
-           else { AnnIndex.upsert(ups, indexDir); true })
-        // empty batch ⇒ nothing applied; the stamp still advances
-        // once the index exists (the idle-gap rule — stampNoOpBatch)
-        if (applied) writeBatchStamp(spark, indexDir, batchId)
-        else stampNoOpBatch(spark, indexDir, batchId)
-        lastBatch = batchId
-      }
-      onApplied(batchId)
-    }
+    stampedForeachBatch(indexDir) { batch =>
+      // the batch frame feeds two writes — materialize once
+      val b = batch.localCheckpoint(true)
+      val dels = b.filter(col("op") === "D").select("id")
+      val ups = b.filter(col("op") =!= "D").drop("op")
+      (if (dels.isEmpty) false
+       else { AnnIndex.delete(dels, indexDir); true }) |
+      (if (ups.isEmpty) false
+       else { AnnIndex.upsert(ups, indexDir); true })
+    }((_, batchId) => onApplied(batchId))
   }
 
   /** Streaming quota gate (#226) — q87's consumer wired to #225's
@@ -1911,12 +1726,8 @@ object EventStream {
       val spark = batch.sparkSession
       import spark.implicits._
       fold(batch, batchId)
-      val artifactPath = new org.apache.hadoop.fs.Path(dir)
-      val artifactExists = artifactPath
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(artifactPath)
       grid match {
-        case None if artifactExists =>
+        case None if dirExists(spark, dir) =>
           // adopt the history grid ONCE, AFTER the fold — the artifact
           // already contains this batch, so no batch-side add here;
           // also covers restarts (the artifact is the durable state).

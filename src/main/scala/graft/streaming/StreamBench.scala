@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
   * have passed every gate. These lines price five REPRESENTATIVE
   * monitor shapes end to end at bench scale, one per state regime:
   *
-  *  - `stream:control_chart` — a [[MonitorState]] driver-fold monitor
-  *    (bounded key domain, per-batch report re-derived from the fold);
-  *  - `stream:hist_artifact` — a parquet-artifact maintainer (state
-  *    lives day-partitioned on disk with a durable batch stamp; the
-  *    per-batch cost is merge + overwrite of touched partitions);
+  *  - `stream:control_chart` — a driver-fold monitor on the
+  *    [[EventStream.FoldMonitor]] skeleton (bounded key domain,
+  *    per-batch report re-derived from the fold);
+  *  - `stream:hist_artifact` — a parquet-artifact maintainer on the
+  *    stamped-artifact skeleton (`EventStream.stampedForeachBatch`:
+  *    state lives day-partitioned on disk with a durable batch stamp;
+  *    the per-batch cost is merge + overwrite of touched partitions);
   *  - `stream:neardup_gate` — a stateless foreachBatch ingest gate
   *    (batch joins against static corpus band/sig tables);
   *  - `stream:bloom_dedup` (r14) — the flatMapGroupsWithState regime

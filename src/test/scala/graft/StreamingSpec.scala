@@ -1756,6 +1756,67 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(g2.getMessage.contains("configuration-scale"),
       s"chart bound guard message: ${g2.getMessage}")
+    //    ...and on the other four monitors, each fed a key domain
+    //    wider than the cap
+    val overBound: Seq[(String, (DataFrame, Long) => Unit, DataFrame)] = Seq(
+      ("alphaMix", EventStream.alphaMixForeachBatch(maxKeys = 4)((_, _) => ()),
+        (0 until 10).map(i => (i.toLong, s"l$i")).toDF("doc_id", "lang")),
+      ("benford", EventStream.benfordForeachBatch(maxKeys = 4)((_, _) => ()),
+        (1 to 9).map(_ * 10L).toDF("cents")),
+      ("chiSquare",
+        EventStream.chiSquareForeachBatch(nation, maxKeys = 4)((_, _) => ()),
+        (0 until 10).map(i => (s"S$i", 0L)).toDF("segment", "nationkey")),
+      ("skyline", EventStream.skylineForeachBatch(maxKeys = 4)((_, _) => ()),
+        (0 until 10).map(i => ("acme", 100L + i, 1L))
+          .toDF("brand", "price_cents", "size")))
+    overBound.foreach { case (name, sink, wideBatch) =>
+      val e = intercept[IllegalStateException] { sink(wideBatch, 0L) }
+      assert(e.getMessage.contains("configuration-scale"),
+        s"$name bound guard message: ${e.getMessage}")
+    }
+  }
+
+  test("fold monitors check the key bound before committing: a retried over-bound batch throws again") {
+    import spark.implicits._
+    def cells(types: String*) = types.map(t => (t, "2024-01-01", 1L))
+      .toDF("event_type", "day", "cents")
+    val reportRows = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val sink = EventStream.cusumForeachBatch(maxKeys = 4) { (r, _) =>
+      reportRows += r.count()
+    }
+    sink(cells("a", "b", "c"), 0L)
+    // 3 + 3 new keys > 4: the merged state would break the bound
+    val e = intercept[IllegalStateException] { sink(cells("d", "e", "f"), 1L) }
+    assert(e.getMessage.contains("configuration-scale"), e.getMessage)
+    // the same closure retried on the same batch id must throw again,
+    // not skip the fold as already done and emit over-bound state
+    val e2 = intercept[IllegalStateException] { sink(cells("d", "e", "f"), 1L) }
+    assert(e2.getMessage.contains("configuration-scale"), e2.getMessage)
+    // state is as batch 0 left it: an in-bound batch folds onto 3 keys
+    sink(cells("a", "d"), 2L)
+    assert(reportRows == Seq(3L, 4L))
+  }
+
+  test("histogram artifact: a fresh checkpoint far behind the stamp fails loudly") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_hrew").toString + "/h"
+    val rows = Seq((java.sql.Date.valueOf("2024-01-01"), "click", 7L))
+      .toDF("day", "event_type", "v")
+    def artifact() = spark.read.parquet(dir).collect().map(_.toString).toSet
+    // stamp the artifact through batch 100
+    EventStream.histogramArtifactForeachBatch(dir, Seq("event_type"))()(rows, 100L)
+    val stamped = artifact()
+    // a small gap below the stamp is a checkpoint rewind: skip-fold
+    EventStream.histogramArtifactForeachBatch(dir, Seq("event_type"))()(rows, 50L)
+    assert(artifact() == stamped, "rewind replay re-merged into the artifact")
+    // a fresh checkpoint (ids reset to 0) against the old artifact
+    // would skip every fold until ids crawl past 100: it must throw
+    val e = intercept[IllegalStateException] {
+      EventStream.histogramArtifactForeachBatch(dir, Seq("event_type"))()(rows, 0L)
+    }
+    assert(e.getMessage.contains("fresh checkpoint"),
+      s"wrong rewind guard message: ${e.getMessage}")
+    assert(artifact() == stamped, "the refused batch touched the artifact")
   }
 
   test("artifact maintainers survive an empty first batch (no data-less dir commit)") {
